@@ -159,6 +159,18 @@ class BlockSetAlgebra:
             self._memo[key] = self._eval(pred)
         return self._memo[key]
 
+    def bucket_groups(self, bucket_pred: dict, fields: Sequence[str]) -> list:
+        """``fields`` grouped by bucket-predicate shape, in field order:
+        [(fields, docids(shape))], so each shape's set is planned and
+        counted once for all of its fields."""
+        groups: dict = {}
+        for fld in fields:
+            key = _freeze(bucket_pred[fld])
+            if key not in groups:
+                groups[key] = ([], self.docids(bucket_pred[fld]))
+            groups[key][0].append(fld)
+        return list(groups.values())
+
     def _eval(self, pred: tuple):
         op = pred[0]
         if op == "true":

@@ -21,9 +21,14 @@ from __future__ import annotations
 
 import math
 import re
-from typing import Any, Callable, Dict, Iterator, List, Optional, Sequence, Tuple
+import time
+from contextlib import contextmanager
+from typing import (
+    Any, Callable, Dict, Iterator, List, NamedTuple, Optional, Sequence, Tuple,
+)
 
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -192,6 +197,74 @@ def _parse_paging(input: Dict[str, Any]) -> Tuple[int, int]:
     return per_page, page
 
 
+def _run_concurrently(
+    spark: SparkSession,
+    thunks: Sequence[Callable[[], Any]],
+    max_workers: Optional[int] = None,
+) -> List[Any]:
+    """Run independent Spark actions from driver threads so the scheduler
+    overlaps their jobs; results come back in ``thunks`` order. Each
+    thread runs under ``inheritable_thread_target``, so its jobs carry
+    the caller's job group, local properties and session tags (a
+    request's work stays attributable, and cancellable with
+    ``cancelJobGroup``). Each thunk is wrapped on its own, so every
+    thread gets its own copy of the properties."""
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    from concurrent.futures import ThreadPoolExecutor
+
+    workers = min(len(thunks), max_workers or len(thunks))
+    with ThreadPoolExecutor(max_workers=workers) as ex:
+        futures = [
+            ex.submit(inheritable_thread_target(spark)(t)) for t in thunks
+        ]
+        return [f.result() for f in futures]
+
+
+def _score_fold(
+    joined: DataFrame, keys: Sequence[str], *aggs: Column
+) -> Tuple[DataFrame, Column]:
+    """The lunr score fold: group ``joined`` (term, w, tf, idf) rows by
+    ``keys`` and sum each group's contributions w·tf·idf (query weight
+    × doc tf × idf, multiplied in that order) in sorted-term order (a
+    sorted array of (term, c) structs folded left from 0.0). Both the
+    multiplication and the addition order are the oracle's
+    (``scoring.score_doc``), so every score equals it bit for bit.
+    Returns the grouped frame (plus ``aggs``) and its score column,
+    before the division by the query magnitude."""
+    per = joined.groupBy(*keys).agg(
+        *aggs,
+        F.sort_array(
+            F.collect_list(
+                F.struct(
+                    F.col("term"),
+                    (F.col("w") * F.col("tf") * F.col("idf")).alias("c"),
+                )
+            )
+        ).alias("contribs"),
+    )
+    return per, F.aggregate("contribs", F.lit(0.0), lambda acc, x: acc + x["c"])
+
+
+def _collect_page(df: DataFrame, keep: Sequence[str]) -> List[Dict[str, Any]]:
+    """Collect ``df``'s ``keep`` columns as response items (``_id``)."""
+    return [
+        _row_to_item(r)
+        for r in df.select(*keep).withColumnRenamed(DOCID, "_id").collect()
+    ]
+
+
+class _RouteRun(NamedTuple):
+    """What a route's search phase leaves to the shared skeleton in
+    ``_search_dispatch``: ``facets`` returns (aggregations, total) and
+    ``page`` the page items, run concurrently; ``all_items``, when set,
+    collects allFilteredItems."""
+
+    facets: Callable[[], Tuple[Dict[str, Any], int]]
+    page: Callable[[], List[Dict[str, Any]]]
+    all_items: Optional[Callable[[], List[Dict[str, Any]]]] = None
+
+
 def ir_to_column(pred: tuple, has_query_col: bool) -> Column:
     op = pred[0]
     if op == "true":
@@ -230,19 +303,6 @@ class SearchEngine:
     # scoring projection (no per-query BroadcastExchange); larger prefix
     # expansions fall back to a broadcast join
     MAX_MAP_LITERAL_TERMS = 256
-    # score aggregation pivots per-doc contributions onto sorted-term-rank
-    # columns (one conditional sum each, folded in rank order — no struct
-    # array, no term strings in the shuffle) up to this many ranks; wider
-    # expansions keep the sorted-struct-array fold (same reduction order,
-    # bit-identical scores either way).  Cap = 2, set by measurement: an
-    # interleaved A/B at 60k turns found the conditional-sum plan at
-    # parity with the fold for 1-2 term queries (the dominant case, and
-    # where dropping term strings from the shuffle matters) but 25-60%
-    # SLOWER from 3 terms up (n=3 0.257 vs 0.201 s, n=6 0.295 vs 0.200,
-    # n=12 0.349 vs 0.220 — the per-row WHEN-chain scales with rank
-    # count while the fold's per-row cost is flat), which was the
-    # round-4 ft_prefix regression.
-    WIDE_SUM_MAX_TERMS = 2
     # reference-mandated allFilteredItems collect refuses above this
     # many rows (the driver is not a sink for a corpus-sized result)
     ALL_FILTERED_MAX_ITEMS = 200_000
@@ -361,8 +421,6 @@ class SearchEngine:
         and the Arrow tokenizer scan overlap instead of serializing —
         on a wide cluster this is the difference between paying the
         slowest stage and paying the sum of stages."""
-        from concurrent.futures import ThreadPoolExecutor
-
         idx = self.index
         jobs = [idx.docs, idx.facet_values]
         if idx.postings is not None and not self._ft_materialized:
@@ -372,8 +430,7 @@ class SearchEngine:
             ).persist()
             jobs.append(idx.postings)
         idx.facet_values = idx.facet_values.persist()
-        with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-            list(ex.map(lambda df: df.count(), jobs))
+        _run_concurrently(self.spark, [df.count for df in jobs])
         if idx.terms is not None and not self._ft_materialized:
             idx.terms = idx.terms.persist()
             idx.terms.count()  # after postings: reuses the fresh cache
@@ -859,17 +916,34 @@ class SearchEngine:
         self._term_dict_data = (pdf["term"].tolist(), pdf["idf"].tolist())
         return self._term_dict_data
 
-    def _expand_tokens_driver(
+    def _expand_tokens(
         self, distinct_tokens: Sequence[str]
-    ) -> Optional[Tuple[Dict[str, float], Dict[str, List[str]]]]:
-        """Prefix-expand via the cached dictionary: (idf_map, token →
-        sorted expanded terms). None when the dictionary is too big to
-        pin (caller falls back to the scan job); _ExpansionTooLarge
-        beyond MAX_DRIVER_EXPANSION distinct terms — identical overflow
-        semantics to the scan path."""
+    ) -> Tuple[Dict[str, float], Dict[str, List[str]]]:
+        """Prefix-expand sorted distinct tokens: (idf_map, token →
+        sorted expanded terms), from the cached dictionary when it fits
+        the driver (zero Spark jobs), else from one dictionary-scan job.
+        _ExpansionTooLarge beyond MAX_DRIVER_EXPANSION distinct terms —
+        the same overflow semantics either way."""
         d = self._term_dictionary()
         if d is None:
-            return None
+            cond = None
+            for tok in distinct_tokens:
+                c = F.col("term").startswith(tok)
+                cond = c if cond is None else (cond | c)
+            expanded = (
+                self.index.terms.filter(cond)
+                .select("term", "idf")
+                .limit(self.MAX_DRIVER_EXPANSION + 1)
+                .collect()
+            )
+            if len(expanded) > self.MAX_DRIVER_EXPANSION:
+                raise _ExpansionTooLarge(" ".join(distinct_tokens))
+            term_rows = sorted(expanded, key=lambda r: r["term"])
+            by_token = {
+                tok: [r["term"] for r in term_rows if r["term"].startswith(tok)]
+                for tok in distinct_tokens
+            }
+            return {r["term"]: r["idf"] for r in term_rows}, by_token
         import bisect
 
         terms, idfs = d
@@ -928,30 +1002,7 @@ class SearchEngine:
             if not tokens:
                 return None
 
-        distinct_tokens = sorted(set(tokens))
-        exp = self._expand_tokens_driver(distinct_tokens)
-        if exp is not None:
-            idf_map, by_token = exp
-        else:
-            cond = None
-            for tok in distinct_tokens:
-                c = F.col("term").startswith(tok)
-                cond = c if cond is None else (cond | c)
-            expanded = (
-                idx.terms.filter(cond)
-                .select("term", "idf")
-                .limit(self.MAX_DRIVER_EXPANSION + 1)
-                .collect()
-            )
-            if len(expanded) > self.MAX_DRIVER_EXPANSION:
-                raise _ExpansionTooLarge(query)
-            term_rows = sorted(expanded, key=lambda r: r["term"])
-            by_token = {
-                tok: [r["term"] for r in term_rows if r["term"].startswith(tok)]
-                for tok in distinct_tokens
-            }
-            idf_map = {r["term"]: r["idf"] for r in term_rows}
-
+        idf_map, by_token = self._expand_tokens(sorted(set(tokens)))
         qv = scoring.build_query_vector(
             tokens,
             n_fields=len(idx.text_fields),
@@ -981,8 +1032,6 @@ class SearchEngine:
         (blocks.py layout; defaults to the index's own block store).
         Scale path: prunes docid ranges by metadata upper bounds; scores
         are bit-identical to ``fulltext_hits``."""
-        from .wand import wand_topk
-
         if blocks is None:
             blocks = self.index.posting_blocks
         if blocks is None:
@@ -990,45 +1039,7 @@ class SearchEngine:
                 "fulltext_topk needs a posting-block table: pass one or "
                 "open the index via Index.read over a write_blocks store"
             )
-        try:
-            analyzed = _analyzed if _analyzed is not None else self._query_vector(query)
-        except _ExpansionTooLarge:
-            raise EngineError(
-                "prefix expansion exceeds driver capacity; WAND needs the "
-                "driver-side query vector — use fulltext_hits, whose "
-                "distributed-expansion path handles this query"
-            )
-        empty = self.spark.createDataFrame([], f"{DOCID} long, {SCORE} double")
-        if analyzed is None:
-            return empty
-        qv, idf_map = analyzed
-        term_weights = {t: qv.weights[t] * idf_map[t] for t in qv.weights}
-        term_masks = {
-            t: sum(1 << i for i in qv.term_tokens[t]) for t in qv.weights
-        }
-        full_mask = (1 << qv.n_tokens) - 1
-        k_eff = self._wand_k_with_tombstones(k)
-        out = wand_topk(
-            self.spark,
-            blocks,
-            term_weights,
-            term_masks,
-            full_mask,
-            qv.magnitude,
-            k_eff,
-            batch_ranges=batch_ranges,
-        ).withColumnRenamed("_docid", DOCID).withColumnRenamed("__score", SCORE)
-        if k_eff != k:
-            # removing tombstoned hits only promotes lower ranks, so the
-            # live top-k is exactly the filtered over-fetched top-k_eff
-            out = (
-                self._live(out)
-                .orderBy(
-                    F.col(SCORE).desc(), F.col(DOCID).cast("string").asc()
-                )
-                .limit(k)
-            )
-        return out
+        return self._wand_topk(query, k, blocks, batch_ranges, _analyzed)
 
     def fulltext_topk_filtered(
         self,
@@ -1055,8 +1066,6 @@ class SearchEngine:
         ``facet_blocks`` must be built with the same range_size as
         ``blocks`` (facetblocks.build_facet_blocks; defaults to the
         index's own store)."""
-        from .wand import wand_topk
-
         if blocks is None:
             blocks = self.index.posting_blocks
         if facet_blocks is None:
@@ -1065,41 +1074,64 @@ class SearchEngine:
             raise ValueError(
                 "fulltext_topk_filtered needs posting AND facet block tables"
             )
-        try:
-            analyzed = _analyzed if _analyzed is not None else self._query_vector(query)
-        except _ExpansionTooLarge:
-            raise EngineError(
-                "prefix expansion exceeds driver capacity; use fulltext_hits"
-            )
-        empty = self.spark.createDataFrame([], f"{DOCID} long, {SCORE} double")
-        if analyzed is None:
-            return empty
-        qv, idf_map = analyzed
-        term_weights = {t: qv.weights[t] * idf_map[t] for t in qv.weights}
-        term_masks = {
-            t: sum(1 << i for i in qv.term_tokens[t]) for t in qv.weights
-        }
         filter_fields = None
         if filter_groups is None:
             filter_fields = {
                 fld: [x for x in (js_key(v) for v in vals or []) if x is not None]
                 for fld, vals in (filters or {}).items()
             }
+        return self._wand_topk(
+            query,
+            k,
+            blocks,
+            batch_ranges,
+            _analyzed,
+            filter_blocks=facet_blocks,
+            filter_fields=filter_fields,
+            filter_groups=filter_groups,
+        )
+
+    def _wand_topk(
+        self,
+        query: str,
+        k: int,
+        blocks: DataFrame,
+        batch_ranges: int,
+        analyzed,
+        **filter_kw: Any,
+    ) -> DataFrame:
+        """The WAND top-k both entry points share: query analysis (the
+        driver-side vector WAND needs), the range walk, and the live
+        re-rank when tombstones are set."""
+        from .wand import wand_topk
+
+        try:
+            if analyzed is None:
+                analyzed = self._query_vector(query)
+        except _ExpansionTooLarge:
+            raise EngineError(
+                "prefix expansion exceeds driver capacity; WAND needs the "
+                "driver-side query vector — use fulltext_hits, whose "
+                "distributed-expansion path handles this query"
+            )
+        if analyzed is None:
+            return self.spark.createDataFrame([], f"{DOCID} long, {SCORE} double")
+        qv, idf_map = analyzed
         k_eff = self._wand_k_with_tombstones(k)
         out = wand_topk(
             self.spark,
             blocks,
-            term_weights,
-            term_masks,
+            {t: (qv.weights[t], idf_map[t]) for t in qv.weights},
+            {t: sum(1 << i for i in qv.term_tokens[t]) for t in qv.weights},
             (1 << qv.n_tokens) - 1,
             qv.magnitude,
             k_eff,
             batch_ranges=batch_ranges,
-            filter_blocks=facet_blocks,
-            filter_fields=filter_fields,
-            filter_groups=filter_groups,
+            **filter_kw,
         ).withColumnRenamed("_docid", DOCID).withColumnRenamed("__score", SCORE)
         if k_eff != k:
+            # removing tombstoned hits only promotes lower ranks, so the
+            # live top-k is exactly the filtered over-fetched top-k_eff
             out = (
                 self._live(out)
                 .orderBy(
@@ -1138,36 +1170,12 @@ class SearchEngine:
         # ONE expansion for every query: the cached driver dictionary
         # when it fits (zero Spark jobs), else one dictionary-scan job
         try:
-            exp = self._expand_tokens_driver(sorted(all_tokens))
+            idf_map, by_token = self._expand_tokens(sorted(all_tokens))
         except _ExpansionTooLarge:
             raise EngineError(
                 "combined prefix expansion exceeds driver capacity; run the "
                 "oversized queries individually through fulltext_hits"
             )
-        if exp is not None:
-            idf_map, by_token = exp
-        else:
-            cond = None
-            for tok in sorted(all_tokens):
-                c = F.col("term").startswith(tok)
-                cond = c if cond is None else (cond | c)
-            rows_raw = (
-                idx.terms.filter(cond)
-                .select("term", "idf")
-                .limit(self.MAX_DRIVER_EXPANSION + 1)
-                .collect()
-            )
-            if len(rows_raw) > self.MAX_DRIVER_EXPANSION:
-                raise EngineError(
-                    "combined prefix expansion exceeds driver capacity; run "
-                    "the oversized queries individually through fulltext_hits"
-                )
-            term_rows = sorted(rows_raw, key=lambda r: r["term"])
-            idf_map = {r["term"]: r["idf"] for r in term_rows}
-            by_token = {
-                tok: [r["term"] for r in term_rows if r["term"].startswith(tok)]
-                for tok in all_tokens
-            }
 
         rows = []
         for qid, tokens in analyzed:
@@ -1188,7 +1196,8 @@ class SearchEngine:
                     (
                         qid,
                         term,
-                        float(w * idf_map[term]),
+                        float(w),
+                        float(idf_map[term]),
                         sum(1 << i for i in qv.term_tokens[term]),
                         float(qv.magnitude),
                         fmask,
@@ -1196,86 +1205,24 @@ class SearchEngine:
                 )
         if not rows:
             return empty
-        all_terms = sorted({r[1] for r in rows})
-
-        # per-query sorted-term rank: the deterministic reduction order.
-        # Wide path (the common case): pivot each (qid, doc) group's
-        # contributions onto rank columns with one conditional sum per
-        # rank — (term, _docid) is unique in postings, so each cell is a
-        # singleton — then fold the columns in rank order. Bit-identical
-        # to the sorted-struct-array fold (same order; absent ranks add
-        # +0.0, and every contribution is ≥ +0.0 since lunr idf ≥ 1), but
-        # shuffles W nullable doubles instead of materializing per-doc
-        # struct arrays carrying term strings. Per-qid constants (mag,
-        # fmask) stay out of the aggregation entirely — applied after it
-        # from driver-side literal maps.
-        by_qid: Dict[int, List[tuple]] = {}
-        for r in rows:
-            by_qid.setdefault(r[0], []).append(r)
-        tid_of = {
-            (qid, t): i
-            for qid, qrows in by_qid.items()
-            for i, t in enumerate(sorted(r[1] for r in qrows))
-        }
-        width = max(len(qrows) for qrows in by_qid.values())
-        mags = {qid: qrows[0][4] for qid, qrows in by_qid.items()}
-        fmasks = {qid: qrows[0][5] for qid, qrows in by_qid.items()}
-
-        if width <= self.WIDE_SUM_MAX_TERMS and len(by_qid) <= 2048:
-            qdf = self.spark.createDataFrame(
-                [
-                    (qid, t, w, m, tid_of[(qid, t)])
-                    for qid, t, w, m, _mag, _fm in rows
-                ],
-                "qid long, term string, w double, mask long, tid int",
-            )
-            joined = idx.postings_subset(all_terms).join(F.broadcast(qdf), "term")
-            c = F.col("w") * F.col("tf")
-            per = joined.groupBy("qid", DOCID).agg(
-                F.bit_or("mask").alias("mask"),
-                *[
-                    F.sum(F.when(F.col("tid") == i, c)).alias(f"_c{i}")
-                    for i in range(width)
-                ],
-            )
-            magmap = F.create_map(
-                *[x for q, m in mags.items() for x in (F.lit(q), F.lit(m))]
-            )
-            fmaskmap = F.create_map(
-                *[x for q, m in fmasks.items() for x in (F.lit(q), F.lit(m))]
-            )
-            score = F.lit(0.0)
-            for i in range(width):
-                score = score + F.coalesce(F.col(f"_c{i}"), F.lit(0.0))
-            score = score / magmap[F.col("qid")]
-            return (
-                per.filter(F.col("mask") == fmaskmap[F.col("qid")])
-                .withColumn(SCORE, score)
-                .select("qid", DOCID, SCORE)
-            )
-
-        # oversized expansions / huge batches: sorted-struct fold (exact
-        # same reduction order, heavier shuffle)
         qdf = self.spark.createDataFrame(
-            rows, "qid long, term string, w double, mask long, mag double, fmask long"
+            rows,
+            "qid long, term string, w double, idf double, mask long, "
+            "mag double, fmask long",
         )
-        joined = idx.postings_subset(all_terms).join(F.broadcast(qdf), "term")
-        per = joined.groupBy("qid", DOCID).agg(
+        joined = idx.postings_subset(sorted({r[1] for r in rows})).join(
+            F.broadcast(qdf), "term"
+        )
+        per, score = _score_fold(
+            joined,
+            ["qid", DOCID],
             F.bit_or("mask").alias("mask"),
             F.first("mag").alias("mag"),
             F.first("fmask").alias("fmask"),
-            F.sort_array(
-                F.collect_list(
-                    F.struct(F.col("term"), (F.col("w") * F.col("tf")).alias("c"))
-                )
-            ).alias("contribs"),
         )
-        score = F.aggregate(
-            "contribs", F.lit(0.0), lambda acc, x: acc + x["c"]
-        ) / F.col("mag")
         return self._live(
             per.filter(F.col("mask") == F.col("fmask"))
-            .withColumn(SCORE, score)
+            .withColumn(SCORE, score / F.col("mag"))
             .select("qid", DOCID, SCORE)
         )
 
@@ -1337,6 +1284,27 @@ class SearchEngine:
             per_doc.filter(keep).withColumn(SCORE, score).select(DOCID, SCORE)
         )
 
+    def _term_columns(
+        self, subset: DataFrame, rows: Sequence[tuple], schema: str
+    ) -> DataFrame:
+        """Attach per-term query columns to a postings subset: ``rows``
+        are (term, v1, ...) tuples named and typed by ``schema``
+        ("term string, w double, ..."). Up to MAX_MAP_LITERAL_TERMS
+        terms ship as MAP literals — a pure projection, no
+        BroadcastExchange job per query (measured ~0.3 s/query at 1M
+        postings in local mode); larger prefix expansions broadcast-join
+        a small DataFrame instead of a giant literal."""
+        if len(rows) > self.MAX_MAP_LITERAL_TERMS:
+            return subset.join(
+                F.broadcast(self.spark.createDataFrame(list(rows), schema)),
+                "term",
+            )
+        names = [c.split()[0] for c in schema.split(",")]
+        for i, name in enumerate(names[1:], start=1):
+            m = F.create_map(*[x for r in rows for x in (F.lit(r[0]), F.lit(r[i]))])
+            subset = subset.withColumn(name, m[F.col("term")])
+        return subset
+
     def _scored_per_doc(
         self, qv: "scoring.QueryVector", idf_map: Dict[str, float]
     ) -> Tuple[DataFrame, Column]:
@@ -1346,83 +1314,25 @@ class SearchEngine:
         ``query_string_hits`` a per-class (+must/should) mask predicate.
         One co-partitioned aggregate either way; see ``fulltext_hits``
         for the plan rationale."""
-        idx = self.index
         rows = [
-            (term, float(qv.weights[term] * idf_map[term]),
+            (term, float(qv.weights[term]), float(idf_map[term]),
              sum(1 << i for i in qv.term_tokens[term]))
             for term in qv.weights
         ]
-
         # term subset BEFORE weighting: against a persisted term-sorted
         # postings table this pushes an In(term, ...) filter into the
         # parquet scan (row-group min/max pruning); on a block-backed
         # index only the matching compressed blocks are decoded; on the
         # cached path it just narrows the join input
-        subset = idx.postings_subset(list(qv.weights))
-        sorted_terms = sorted(qv.weights)
-        if len(rows) <= self.MAX_MAP_LITERAL_TERMS:
-            # small expansions (the common case): weights/masks as MAP
-            # literals — a pure projection, no BroadcastExchange job per
-            # query (measured ~0.3 s/query at 1M postings in local mode)
-            wmap = F.create_map(
-                *[x for t, w, _m in rows for x in (F.lit(t), F.lit(w))]
-            )
-            mmap = F.create_map(
-                *[x for t, _w, m in rows for x in (F.lit(t), F.lit(m))]
-            )
-            joined = subset.withColumn("w", wmap[F.col("term")]).withColumn(
-                "mask", mmap[F.col("term")]
-            )
-            if len(rows) <= self.WIDE_SUM_MAX_TERMS:
-                tidmap = F.create_map(
-                    *[
-                        x
-                        for i, t in enumerate(sorted_terms)
-                        for x in (F.lit(t), F.lit(i))
-                    ]
-                )
-                joined = joined.withColumn("tid", tidmap[F.col("term")])
-        else:
-            expanded_df = self.spark.createDataFrame(
-                rows, "term string, w double, mask long"
-            )
-            joined = subset.join(F.broadcast(expanded_df), "term")
-
-        if len(rows) <= self.WIDE_SUM_MAX_TERMS:
-            # deterministic reduction in sorted-term order WITHOUT the
-            # struct array: (term, _docid) is unique, so each rank's
-            # conditional sum is a singleton; the column fold runs in
-            # rank order and absent ranks add +0.0 (every contribution
-            # is ≥ +0.0 — lunr idf ≥ 1), bit-identical to the old
-            # sort_array(collect_list(struct)) fold at a fraction of the
-            # shuffle/aggregation-buffer bandwidth.
-            c = F.col("w") * F.col("tf")
-            per_doc = joined.groupBy(DOCID).agg(
-                F.bit_or("mask").alias("mask"),
-                *[
-                    F.sum(F.when(F.col("tid") == i, c)).alias(f"_c{i}")
-                    for i in range(len(sorted_terms))
-                ],
-            )
-            score = F.lit(0.0)
-            for i in range(len(sorted_terms)):
-                score = score + F.coalesce(F.col(f"_c{i}"), F.lit(0.0))
-            score = score / F.lit(qv.magnitude)
-        else:
-            per_doc = joined.groupBy(DOCID).agg(
-                F.bit_or("mask").alias("mask"),
-                # deterministic reduction order: sort contributions by term
-                # before summing, so scores equal the oracle bit-for-bit
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("term"), (F.col("w") * F.col("tf")).alias("c")))
-                ).alias("contribs"),
-            )
-            score = F.aggregate(
-                "contribs",
-                F.lit(0.0),
-                lambda acc, x: acc + x["c"],
-            ) / F.lit(qv.magnitude)
-        return per_doc, score
+        joined = self._term_columns(
+            self.index.postings_subset(list(qv.weights)),
+            rows,
+            "term string, w double, idf double, mask long",
+        )
+        per_doc, score = _score_fold(
+            joined, [DOCID], F.bit_or("mask").alias("mask")
+        )
+        return per_doc, score / F.lit(qv.magnitude)
 
     @staticmethod
     def _admission_pred(
@@ -3116,54 +3026,20 @@ class SearchEngine:
         self, rows: List[Tuple[str, float]]
     ) -> DataFrame:
         """Shared union scorer for term-set queries (wildcard/regexp):
-        score(doc) = Σ tf·idf over the doc's terms in the set, via a
-        term-pruned postings subset + ONE aggregation (fixed-term-order
-        fold when narrow, sorted-struct fold when wide)."""
+        score(doc) = Σ tf·idf over the doc's terms in the set (``rows``
+        are (term, idf)), via a term-pruned postings subset + ONE
+        aggregation (the lunr score fold)."""
         empty = self.spark.createDataFrame(
             [], f"{DOCID} long, {SCORE} double"
         )
         if not rows:
             return empty
-        subset = self.index.postings_subset([t for t, _ in rows])
-        if len(rows) <= self.MAX_MAP_LITERAL_TERMS:
-            wmap = F.create_map(
-                *[x for t, w in rows for x in (F.lit(t), F.lit(w))]
-            )
-            tidmap = F.create_map(
-                *[
-                    x
-                    for i, (t, _) in enumerate(rows)
-                    for x in (F.lit(t), F.lit(i))
-                ]
-            )
-            joined = subset.withColumn("w", wmap[F.col("term")])
-        else:
-            wdf = self.spark.createDataFrame(rows, "term string, w double")
-            joined = subset.join(F.broadcast(wdf), "term")
-            tidmap = None
-        c = F.col("w") * F.col("tf")
-        if len(rows) <= self.WIDE_SUM_MAX_TERMS:
-            # deterministic fixed-term-order fold (same trick as the
-            # lunr scorer's wide-sum path)
-            joined = joined.withColumn("tid", tidmap[F.col("term")])
-            per_doc = joined.groupBy(DOCID).agg(
-                *[
-                    F.sum(F.when(F.col("tid") == i, c)).alias(f"_c{i}")
-                    for i in range(len(rows))
-                ]
-            )
-            score = F.lit(0.0)
-            for i in range(len(rows)):
-                score = score + F.coalesce(F.col(f"_c{i}"), F.lit(0.0))
-        else:
-            per_doc = joined.groupBy(DOCID).agg(
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("term"), c.alias("c")))
-                ).alias("contribs")
-            )
-            score = F.aggregate(
-                "contribs", F.lit(0.0), lambda acc, x: acc + x["c"]
-            )
+        joined = self._term_columns(
+            self.index.postings_subset([t for t, _ in rows]),
+            rows,
+            "term string, idf double",
+        ).withColumn("w", F.lit(1.0))  # unit query weight: Σ tf·idf
+        per_doc, score = _score_fold(joined, [DOCID])
         return self._live(
             per_doc.withColumn(SCORE, score).select(DOCID, SCORE)
         )
@@ -3171,7 +3047,7 @@ class SearchEngine:
     def explain_hits(self, query: str, k_docs: int = 10) -> DataFrame:
         """Per-(doc, term) relevance breakdown for a query's top-k docs
         — the Lucene ``explain`` analog (extension): ``contribution`` =
-        query_weight(term) × idf(term) × tf(doc, term) / |q|, and a
+        query_weight(term) × tf(doc, term) × idf(term) / |q|, and a
         doc's contributions sum to its ``fulltext_hits`` score (before
         the final display rounding). Plan: the normal scorer picks the
         top-k docids, then one more term-pruned postings-subset scan
@@ -3200,19 +3076,15 @@ class SearchEngine:
             .select(DOCID)
         )
         rows = sorted(
-            (t, float(qv.weights[t] * idf_map[t])) for t in qv.weights
+            (t, float(qv.weights[t]), float(idf_map[t])) for t in qv.weights
         )
-        subset = self.index.postings_subset([t for t, _ in rows])
-        if len(rows) <= self.MAX_MAP_LITERAL_TERMS:
-            wmap = F.create_map(
-                *[x for t, w in rows for x in (F.lit(t), F.lit(w))]
-            )
-            joined = subset.withColumn("w", wmap[F.col("term")])
-        else:
-            wdf = self.spark.createDataFrame(rows, "term string, w double")
-            joined = subset.join(F.broadcast(wdf), "term")
+        joined = self._term_columns(
+            self.index.postings_subset([t for t, _w, _i in rows]),
+            rows,
+            "term string, w double, idf double",
+        )
         contribution = F.round(
-            F.col("w") * F.col("tf") / F.lit(qv.magnitude), 6
+            F.col("w") * F.col("tf") * F.col("idf") / F.lit(qv.magnitude), 6
         )
         return (
             joined.join(F.broadcast(top), DOCID)
@@ -4226,9 +4098,10 @@ class SearchEngine:
                 F.max("idf").alias("__idf"),  # constant within a term
                 F.bit_or(F.expr("shiftleft(1L, tok_idx)")).alias("mask"),
             ).select(
-                # contribution per posting = qweight × doc-side idf × tf
+                # contribution per posting = qweight × tf × idf
                 "term",
-                (F.col("__fw.val") * F.col("__idf")).alias("w"),
+                F.col("__fw.val").alias("w"),
+                F.col("__idf").alias("idf"),
                 "mask",
             ).persist()
             # tracked on the engine: released by release_expansion_caches
@@ -4246,20 +4119,14 @@ class SearchEngine:
             postings = postings_from_blocks(idx.posting_blocks)
         joined = postings.join(termvec, "term")
         full_mask = (1 << len(tokens)) - 1
-        per_doc = joined.groupBy(DOCID).agg(
-            F.bit_or("mask").alias("mask"),
-            F.sort_array(
-                F.collect_list(
-                    F.struct(F.col("term"), (F.col("w") * F.col("tf")).alias("c"))
-                )
-            ).alias("contribs"),
+        per_doc, score = _score_fold(
+            joined, [DOCID], F.bit_or("mask").alias("mask")
         )
-        score = F.aggregate(
-            "contribs", F.lit(0.0), lambda acc, x: acc + x["c"]
-        ) / F.lit(magnitude)
         keep = self._admission_pred(full_mask, len(tokens), min_should_match)
         return (
-            per_doc.filter(keep).withColumn(SCORE, score).select(DOCID, SCORE)
+            per_doc.filter(keep)
+            .withColumn(SCORE, score / F.lit(magnitude))
+            .select(DOCID, SCORE)
         )
 
     def _candidates(
@@ -4634,55 +4501,89 @@ class SearchEngine:
             if hl:
                 it["_highlight"] = hl
 
+    def plan(self, input: Optional[Dict[str, Any]] = None) -> Dict[str, Any]:
+        """The search planner: the physical route ``search()`` takes for
+        ``input`` (``route``), ``why``, and in ``trace`` the reason each
+        faster route declined, with the cost model's predicted seconds.
+        ``_search_dispatch``, ``explain_search`` and ``get_buckets`` all
+        route through it, so introspection is dispatch. It runs no query
+        (the first call may collect the facet dimension it costs
+        against). A WAND runner can still hand a request back to the
+        standard route mid-flight: an oversized prefix expansion, or a
+        filter shape filtered WAND cannot express."""
+        input = input or {}
+        trace: List[str] = []
+
+        def route(name: str, why: str) -> Dict[str, Any]:
+            return {"route": name, "why": why, "trace": trace}
+
+        if self._wand_search_applies(input):
+            return route(
+                "wand_topk",
+                "relevance-ordered query page: block-max WAND top-k over "
+                "the compressed posting store",
+            )
+        trace.append("wand_topk: input shape not a pure relevance query page")
+        if self._wand_filtered_search_applies(input):
+            return route(
+                "wand_filtered",
+                "query + facet filters: filtered block-max WAND page, "
+                "buckets from one mask-only corpus pass (falls back to "
+                "the standard path if the request declines mid-flight)",
+            )
+        trace.append("wand_filtered: input shape not a filtered query page")
+        if self._facetblock_search_applies(input, trace):
+            return route(
+                "facet_blocks",
+                "filter-only search: per-value posting-block set algebra "
+                "predicted cheaper than the corpus scan",
+            )
+        return route(
+            "standard_scan",
+            "corpus-scan plan (every faster route declined — see trace)",
+        )
+
     def explain_search(
         self, input: Optional[Dict[str, Any]] = None
     ) -> Dict[str, Any]:
-        """Route introspection: which physical route ``search()`` would
-        take for this input, with the cost model's predicted seconds and
-        the reason each faster route declined — no Spark jobs run. The
-        checks mirror ``_search_dispatch``'s order exactly, so the
-        answer is the dispatcher's answer (production observability for
-        the r2 mis-route class of surprises: ask the engine, don't guess
-        from timings)."""
-        input = input or {}
-        trace: List[str] = []
-        exp: Dict[str, Any] = {
+        """Route introspection: ``plan(input)``, the planner ``search()``
+        dispatches on, plus the index facts the routes depend on. No
+        query runs (production observability for the mis-route class of
+        surprises: ask the engine, don't guess from timings)."""
+        return {
             "n_docs": int(self.index.n_docs),
             "tombstones_active": bool(self._tombstones_active()),
             "has_facet_blocks": self.index.facet_posting_blocks is not None,
-            "trace": trace,
+            **self.plan(input),
         }
-        if self._wand_search_applies(input):
-            exp["route"] = "wand_topk"
-            exp["why"] = (
-                "relevance-ordered query page: block-max WAND top-k over "
-                "the compressed posting store"
-            )
-            return exp
-        trace.append("wand_topk: input shape not a pure relevance query page")
-        if self._wand_filtered_search_applies(input):
-            exp["route"] = "wand_filtered"
-            exp["why"] = (
-                "query + facet filters: filtered block-max WAND page, "
-                "buckets from one mask-only corpus pass (falls back to "
-                "the standard path if the request declines mid-flight)"
-            )
-            return exp
-        trace.append("wand_filtered: input shape not a filtered query page")
-        if self._facetblock_search_applies(input, trace):
-            exp["route"] = "facet_blocks"
-            exp["why"] = (
-                "filter-only search: per-value posting-block set algebra "
-                "predicted cheaper than the corpus scan"
-            )
-            return exp
-        exp["route"] = "standard_scan"
-        exp["why"] = "corpus-scan plan (every faster route declined — see trace)"
-        return exp
+
+    @contextmanager
+    def _request_scope(self) -> Iterator[Callable[[Any], Any]]:
+        """Owns what one request caches. Yields ``persist``, which
+        persists a DataFrame (a bool docid set passes through) and
+        returns it; on exit, also on error (a bad sort spec, a callback
+        failure, a collect error), everything persisted is unpersisted
+        and the distributed-expansion caches are released."""
+        persisted: List[DataFrame] = []
+
+        def persist(df):
+            if isinstance(df, DataFrame):
+                df.persist()
+                persisted.append(df)
+            return df
+
+        try:
+            yield persist
+        finally:
+            for df in persisted:
+                df.unpersist()
+            self.release_expansion_caches()
 
     def _search_dispatch(self, input: Dict[str, Any]) -> Dict[str, Any]:
-        import time
-
+        """The route skeleton every route shares: plan, run the route's
+        search phase, then its facet pass and page collect concurrently
+        (independent Spark actions over the phase's caches), then the
+        allFilteredItems collect and the one response."""
         t0 = time.time()
         per_page, page = _parse_paging(input)
 
@@ -4693,73 +4594,77 @@ class SearchEngine:
                 '"query" and "filter" options are not working once native search is disabled'
             )
 
-        if self._wand_search_applies(input):
-            try:
-                return self._search_wand(input)
-            except _ExpansionTooLarge:
-                pass  # oversized prefix: the standard path spills distributed
-        if self._wand_filtered_search_applies(input):
-            try:
-                resp = self._search_wand_filtered(input)
-                if resp is not None:
-                    return resp
-            except _ExpansionTooLarge:
-                pass  # oversized prefix: the standard path spills distributed
-        if self._facetblock_search_applies(input):
-            return self._search_facetblocks(input)
+        route = self.plan(input)["route"]
+        with self._request_scope() as persist:
+            run: Optional[_RouteRun] = None
+            if route == "facet_blocks":
+                run = self._search_facetblocks(input, per_page, page, persist)
+            elif route != "standard_scan":
+                wand = (
+                    self._search_wand_filtered
+                    if route == "wand_filtered"
+                    else self._search_wand
+                )
+                try:
+                    run = wand(input, per_page, page, persist)
+                except _ExpansionTooLarge:
+                    pass  # oversized prefix: the standard path spills distributed
+            if run is None:
+                run = self._search_standard(input, per_page, page, persist)
+            search_s = time.time() - t0
 
-        # request-scoped caches must not outlive the request, even when a
-        # bad sort spec, a callback-filter failure, or a collect error
-        # escapes mid-flight (same contract as _search_facetblocks)
-        persisted: List[DataFrame] = []
-        try:
-            return self._search_standard_impl(
-                input, per_page, page, t0, persisted
+            t_f = time.time()
+
+            def timed_page():
+                t_p = time.time()
+                return run.page(), time.time() - t_p
+
+            (aggregations, total), (items, sorting_s) = _run_concurrently(
+                self.spark, [run.facets, timed_page]
             )
-        finally:
-            for df in persisted:
-                df.unpersist()
-            self.release_expansion_caches()
+            facets_s = time.time() - t_f
+            all_filtered_items = None
+            if run.all_items is not None:
+                t_a = time.time()
+                self._guard_all_filtered_collect(total)
+                all_filtered_items = run.all_items()
+                sorting_s += time.time() - t_a
+        return {
+            "pagination": {"per_page": per_page, "page": page, "total": total},
+            "timings": {
+                "total": int((time.time() - t0) * 1000),
+                "facets": int(facets_s * 1000),
+                "search": int(search_s * 1000),
+                "sorting": int(sorting_s * 1000),
+            },
+            "data": {
+                "items": items,
+                "allFilteredItems": all_filtered_items,
+                "aggregations": aggregations,
+            },
+        }
 
-    def _search_standard_impl(
+    def _search_standard(
         self,
         input: Dict[str, Any],
         per_page: int,
         page: int,
-        t0: float,
-        persisted: List[DataFrame],
-    ) -> Dict[str, Any]:
-        import time
-
-        t_search = time.time()
+        persist: Callable[[Any], Any],
+    ) -> _RouteRun:
+        """The corpus-scan route: the scored candidates are materialized
+        once, then one masked corpus pass counts every bucket and the
+        total while the page collects."""
         hits, _ = self._candidates(input)
-        if hits is not None:
+        has_query = hits is not None
+        if has_query:
             # materialize the scored candidates ONCE; the facets and
-            # page jobs below both read this cache
-            hits = hits.persist()
-            persisted.append(hits)
-            hits.count()
-        compiled = self.compile(input, has_query=hits is not None)
+            # page jobs both read this cache
+            persist(hits).count()
+        compiled = self.compile(input, has_query=has_query)
         base = self._docs_with_query_flag(hits)
-        if hits is not None:
-            base = base.persist()
-            persisted.append(base)
-        flt = base.filter(ir_to_column(compiled.final_pred, hits is not None))
-        search_time = time.time() - t_search
-
-        # facets pass and page collect are independent given the cached
-        # hits — submit them from two driver threads so Spark overlaps
-        # the jobs (both pure JVM; on a cluster this hides the smaller
-        # job entirely, in local mode the tasks interleave)
-        from concurrent.futures import ThreadPoolExecutor
-
-        t_par = time.time()
-
-        def run_facets():
-            # one corpus pass: all facet buckets + the result total
-            return self._get_buckets_impl(
-                input, compiled, base, hits is not None, with_total=True
-            )
+        if has_query:
+            persist(base)
+        flt = base.filter(ir_to_column(compiled.final_pred, has_query))
 
         sa = input.get("search_after")
         if sa is not None:
@@ -4804,60 +4709,26 @@ class SearchEngine:
         keep = self._page_keep(
             page_df.columns, input, (IN_QUERY, QRANK, SCORE)
         )
-
-        page_secs = [0.0]
-
-        def run_page():
-            t0 = time.time()
-            out = [
-                _row_to_item(r)
-                for r in page_df.select(*keep)
-                .withColumnRenamed(DOCID, "_id")
-                .collect()
-            ]
-            page_secs[0] = time.time() - t0
-            return out
-
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            f_facets = ex.submit(run_facets)
-            f_page = ex.submit(run_page)
-            aggregations, total = f_facets.result()
-            items = f_page.result()
-        facets_time = time.time() - t_par
-        if total is None:  # no facet fields configured → plain count
-            total = flt.count()
-        t_s = time.time()
-        all_filtered_items = None
-        if input.get("is_all_filtered_items") and not (
-            input.get("sort") is None and hits is not None
-        ):
-            self._guard_all_filtered_collect(total)
-            all_df = ordered.select(*keep).withColumnRenamed(DOCID, "_id")
-            all_filtered_items = [_row_to_item(r) for r in all_df.collect()]
-        sorting_time = page_secs[0] + (time.time() - t_s)
-
-        return {
-            "pagination": {"per_page": per_page, "page": page, "total": total},
-            "timings": {
-                "total": int((time.time() - t0) * 1000),
-                "facets": int(facets_time * 1000),
-                "search": int(search_time * 1000),
-                "sorting": int(sorting_time * 1000),
-            },
-            "data": {
-                "items": items,
-                "allFilteredItems": all_filtered_items,
-                "aggregations": aggregations,
-            },
-        }
+        # candidates and no sort: allFilteredItems stays null (reference)
+        collect_all = input.get("is_all_filtered_items") and not (
+            input.get("sort") is None and has_query
+        )
+        return _RouteRun(
+            # one corpus pass: all facet buckets + the result total
+            facets=lambda: self._get_buckets_impl(
+                input, compiled, base, has_query, with_total=True
+            ),
+            page=lambda: _collect_page(page_df, keep),
+            all_items=(lambda: _collect_page(ordered, keep)) if collect_all else None,
+        )
 
     # ------------------------------------------------------------------
-    # WAND-accelerated search (block-backed, facetless configs)
+    # WAND-accelerated search (block-backed configs)
     # ------------------------------------------------------------------
-    def _wand_search_applies(self, input: Dict[str, Any]) -> bool:
-        """Relevance-ordered search with nothing to cross — the page is
-        exactly the WAND top-k over the block store, and the total is a
-        membership count (no per-doc score materialization anywhere)."""
+    def _wand_input_ok(self, input: Dict[str, Any]) -> bool:
+        """The guards both WAND routes share: a plain relevance query
+        page over a posting-block store. Everything WAND's range walk
+        cannot see keeps the standard path."""
         return bool(
             input.get("query")
             # quoted segments add phrase constraints WAND can't see
@@ -4865,19 +4736,17 @@ class SearchEngine:
             # fuzzy rewrite / keyset cursors live in the standard path
             and not input.get("fuzzy")
             and input.get("search_after") is None
-            # driver-set tombstones keep the WAND route: fulltext_topk
-            # over-fetches k+|deleted| (bounded) and the membership
-            # count is live-filtered; bulk DataFrame tombstones have no
-            # driver-known bound — standard path
+            # driver-set tombstones keep the WAND routes: the page
+            # over-fetches k+|deleted| (bounded, see fulltext_topk) and
+            # membership counts are live-filtered; bulk DataFrame
+            # tombstones have no driver-known bound — standard path
             and self._tombstone_df is None
             and len(self._tombstone_docids) <= 10_000
             and self.index.posting_blocks is not None
-            and not self.index.facet_fields
             and not input.get("sort")
             and not callable(input.get("filter"))
             and input.get("_ids") is None
             and input.get("ids") is None
-            and not input.get("filters")
             and not input.get("not_filters")
             and not input.get("filters_query")
             and not input.get("range_filters")
@@ -4887,63 +4756,95 @@ class SearchEngine:
             and not input.get("is_all_filtered_items")
         )
 
-    def _search_wand(self, input: Dict[str, Any]) -> Dict[str, Any]:
-        import time
+    def _wand_search_applies(self, input: Dict[str, Any]) -> bool:
+        """Relevance-ordered search with nothing to cross — the page is
+        exactly the WAND top-k over the block store, and the total is a
+        membership count (no per-doc score materialization anywhere)."""
+        return (
+            self._wand_input_ok(input)
+            and not self.index.facet_fields
+            and not input.get("filters")
+        )
 
-        t0 = time.time()
-        per_page, page = _parse_paging(input)
+    def _search_wand(
+        self,
+        input: Dict[str, Any],
+        per_page: int,
+        page: int,
+        persist: Callable[[Any], Any],
+        filtered: bool = False,
+    ) -> Optional[_RouteRun]:
+        """The two WAND routes. The page and its scores come from
+        block-max WAND top-k — ``filtered``: the facet intersection runs
+        inside each admitted range's scoring group — and the total, plus
+        with filters every bucket count in ONE corpus pass, from a
+        mask-only query-membership set; no per-doc score is materialized
+        for the candidate set. The response is bit-identical to the
+        standard path. None declines (a filter shape the WAND groups
+        cannot express); _ExpansionTooLarge propagates — either way the
+        caller takes the standard route."""
         query = input["query"]
-
-        t_s = time.time()
         analyzed = self._query_vector(
             query, synonyms=input.get("synonyms") or None
         )
-        search_time = time.time() - t_s
-        if analyzed is None:
-            return {
-                "pagination": {"per_page": per_page, "page": page, "total": 0},
-                "timings": {
-                    "total": int((time.time() - t0) * 1000),
-                    "facets": 0,
-                    "search": int(search_time * 1000),
-                    "sorting": 0,
-                },
-                "data": {"items": [], "allFilteredItems": None, "aggregations": {}},
-            }
+        groups = None
+        if filtered:
+            groups = self._filters_to_wand_groups(input)
+            if groups is None:
+                return None
+            if analyzed is None:
+                membership = self.spark.createDataFrame([], f"{DOCID} long")
+            else:
+                membership = self._query_membership(analyzed)
+            persist(membership).count()
+            compiled = self.compile(input, has_query=True)
+            base = persist(self._docs_with_query_flag(membership))
 
-        # total = conjunctive membership count: mask-only aggregate over
-        # the query terms' decoded blocks — no contribution collection
-        # (live-filtered: tombstoned matches don't count)
-        total = self._live(self._query_membership(analyzed)).count()
+        def facets() -> Tuple[Dict[str, Any], int]:
+            if filtered:
+                # one corpus pass: all facet buckets + the result total
+                return self._get_buckets_impl(
+                    input, compiled, base, True, with_total=True
+                )
+            # total = conjunctive membership count: mask-only aggregate
+            # over the query terms' decoded blocks (live-filtered:
+            # tombstoned matches don't count)
+            if analyzed is None:
+                return {}, 0
+            return {}, self._live(self._query_membership(analyzed)).count()
 
-        t_p = time.time()
-        k = page * per_page
-        topk = self.fulltext_topk(query, k, _analyzed=analyzed)
-        ranked = topk.orderBy(
-            F.col(SCORE).desc(), F.col(DOCID).cast("string").asc()
-        ).offset((page - 1) * per_page).limit(per_page)
-        page_docs = self.index.docs.join(
-            F.broadcast(ranked.select(DOCID, SCORE)), DOCID
-        ).orderBy(F.col(SCORE).desc(), F.col(DOCID).cast("string").asc())
-        keep = self._page_keep(page_docs.columns, input, (SCORE,))
-        items = [
-            _row_to_item(r)
-            for r in page_docs.select(*keep)
-            .withColumnRenamed(DOCID, "_id")
-            .collect()
-        ]
-        sorting_time = time.time() - t_p
+        def page_items() -> List[Dict[str, Any]]:
+            if per_page == 0 or analyzed is None:
+                return []
+            k = page * per_page
+            if filtered:
+                topk = self.fulltext_topk_filtered(
+                    query, k, filter_groups=groups, _analyzed=analyzed
+                )
+            else:
+                topk = self.fulltext_topk(query, k, _analyzed=analyzed)
+            ranked = topk.orderBy(
+                F.col(SCORE).desc(), F.col(DOCID).cast("string").asc()
+            ).offset((page - 1) * per_page).limit(per_page)
+            page_docs = self.index.docs.join(
+                F.broadcast(ranked.select(DOCID, SCORE)), DOCID
+            ).orderBy(F.col(SCORE).desc(), F.col(DOCID).cast("string").asc())
+            return _collect_page(
+                page_docs, self._page_keep(page_docs.columns, input, (SCORE,))
+            )
 
-        return {
-            "pagination": {"per_page": per_page, "page": page, "total": total},
-            "timings": {
-                "total": int((time.time() - t0) * 1000),
-                "facets": 0,
-                "search": int(search_time * 1000),
-                "sorting": int(sorting_time * 1000),
-            },
-            "data": {"items": items, "allFilteredItems": None, "aggregations": {}},
-        }
+        return _RouteRun(facets=facets, page=page_items)
+
+    def _search_wand_filtered(
+        self,
+        input: Dict[str, Any],
+        per_page: int,
+        page: int,
+        persist: Callable[[Any], Any],
+    ) -> Optional[_RouteRun]:
+        """The filtered-WAND route: ``_search_wand`` with the request's
+        facet filters inside the WAND range walk."""
+        return self._search_wand(input, per_page, page, persist, filtered=True)
 
     def _query_membership(self, analyzed) -> DataFrame:
         """Docids matching the analyzed query conjunctively — a mask-only
@@ -4952,18 +4853,11 @@ class SearchEngine:
         membership for totals and bucket crossing."""
         qv, _idf = analyzed
         full_mask = (1 << qv.n_tokens) - 1
-        mrows = [
-            (t, sum(1 << i for i in qv.term_tokens[t])) for t in qv.weights
-        ]
-        subset = self.index.postings_subset(list(qv.weights))
-        if len(mrows) <= self.MAX_MAP_LITERAL_TERMS:
-            mmap = F.create_map(
-                *[x for t, m_ in mrows for x in (F.lit(t), F.lit(m_))]
-            )
-            masked = subset.withColumn("mask", mmap[F.col("term")])
-        else:  # big prefix expansion: broadcast join, not a giant literal
-            mdf = self.spark.createDataFrame(mrows, "term string, mask long")
-            masked = subset.join(F.broadcast(mdf), "term")
+        masked = self._term_columns(
+            self.index.postings_subset(list(qv.weights)),
+            [(t, sum(1 << i for i in qv.term_tokens[t])) for t in qv.weights],
+            "term string, mask long",
+        )
         return (
             masked.groupBy(DOCID)
             .agg(F.bit_or("mask").alias("mask"))
@@ -5044,33 +4938,9 @@ class SearchEngine:
         idx = self.index
         filters = input.get("filters") or {}
         if not (
-            input.get("query")
-            # quoted segments add phrase constraints WAND can't see
-            and '"' not in str(input.get("query"))
-            # fuzzy rewrite / keyset cursors live in the standard path
-            and not input.get("fuzzy")
-            and input.get("search_after") is None
-            # driver-set tombstones keep this route too: the buckets /
-            # total pass flows through the live-filtered docs choke and
-            # the page over-fetches k+|deleted| (see fulltext_topk);
-            # bulk DataFrame tombstones have no driver-known bound
-            and self._tombstone_df is None
-            and len(self._tombstone_docids) <= 10_000
-            and filters
-            and idx.posting_blocks is not None
+            filters
+            and self._wand_input_ok(input)
             and idx.facet_posting_blocks is not None
-        ):
-            return False
-        if (
-            input.get("sort")
-            or callable(input.get("filter"))
-            or input.get("_ids") is not None
-            or input.get("ids") is not None
-            or input.get("not_filters")
-            or input.get("filters_query")
-            or input.get("range_filters")
-            or input.get("contains")
-            or input.get("is_all_filtered_items")
         ):
             return False
         fieldset = set(idx.facet_fields)
@@ -5091,118 +4961,6 @@ class SearchEngine:
         if n == 0:
             return False
         return self._route_block_cost(est, len(filters))
-
-    def _search_wand_filtered(
-        self, input: Dict[str, Any]
-    ) -> Optional[Dict[str, Any]]:
-        """search({query, filters}) without materializing scores for the
-        full candidate set: the page + scores come from FILTERED
-        block-max WAND (the facet intersection runs inside each admitted
-        range's scoring group), the total + bucket counts from ONE
-        corpus pass over a mask-only query-membership set. The response
-        is bit-identical to the standard path (battery-proven). Returns
-        None to decline (caller falls through to the standard path)."""
-        import time
-        from concurrent.futures import ThreadPoolExecutor
-
-        t0 = time.time()
-        per_page, page = _parse_paging(input)
-        query = input["query"]
-
-        t_s = time.time()
-        analyzed = self._query_vector(  # _ExpansionTooLarge → caller
-            query, synonyms=input.get("synonyms") or None
-        )
-        groups = self._filters_to_wand_groups(input)
-        if groups is None:
-            return None
-
-        persisted: List[DataFrame] = []
-        try:
-            if analyzed is None:
-                membership = self.spark.createDataFrame([], f"{DOCID} long")
-            else:
-                membership = self._query_membership(analyzed)
-            membership = membership.persist()
-            persisted.append(membership)
-            membership.count()
-            compiled = self.compile(input, has_query=True)
-            base = self._docs_with_query_flag(membership).persist()
-            persisted.append(base)
-            search_time = time.time() - t_s
-
-            t_par = time.time()
-
-            def run_facets():
-                # one corpus pass: all facet buckets + the result total
-                return self._get_buckets_impl(
-                    input, compiled, base, True, with_total=True
-                )
-
-            page_secs = [0.0]
-
-            def run_page():
-                t_p = time.time()
-                if per_page == 0 or analyzed is None:
-                    page_secs[0] = time.time() - t_p
-                    return []
-                topk = self.fulltext_topk_filtered(
-                    query,
-                    page * per_page,
-                    filter_groups=groups,
-                    _analyzed=analyzed,
-                )
-                ranked = (
-                    topk.orderBy(
-                        F.col(SCORE).desc(), F.col(DOCID).cast("string").asc()
-                    )
-                    .offset((page - 1) * per_page)
-                    .limit(per_page)
-                )
-                page_docs = self.index.docs.join(
-                    F.broadcast(ranked.select(DOCID, SCORE)), DOCID
-                ).orderBy(F.col(SCORE).desc(), F.col(DOCID).cast("string").asc())
-                keep = self._page_keep(page_docs.columns, input, (SCORE,))
-                out = [
-                    _row_to_item(r)
-                    for r in page_docs.select(*keep)
-                    .withColumnRenamed(DOCID, "_id")
-                    .collect()
-                ]
-                page_secs[0] = time.time() - t_p
-                return out
-
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                f_facets = ex.submit(run_facets)
-                f_page = ex.submit(run_page)
-                aggregations, total = f_facets.result()
-                items = f_page.result()
-            facets_time = time.time() - t_par
-            if total is None:  # defensive: this path requires facet fields
-                total = base.filter(
-                    ir_to_column(compiled.final_pred, True)
-                ).count()
-
-            return {
-                "pagination": {
-                    "per_page": per_page, "page": page, "total": total,
-                },
-                "timings": {
-                    "total": int((time.time() - t0) * 1000),
-                    "facets": int(facets_time * 1000),
-                    "search": int(search_time * 1000),
-                    "sorting": int(page_secs[0] * 1000),
-                },
-                "data": {
-                    "items": items,
-                    "allFilteredItems": None,
-                    "aggregations": aggregations,
-                },
-            }
-        finally:
-            for df in persisted:
-                df.unpersist()
-            self.release_expansion_caches()
 
     # ------------------------------------------------------------------
     # facet-block search (index-side set algebra, block-backed configs)
@@ -5299,89 +5057,32 @@ class SearchEngine:
             )
         return t_block < t_scan
 
-    def _search_facetblocks(self, input: Dict[str, Any]) -> Dict[str, Any]:
-        # the docid-set caches must not outlive the request, even when a
-        # bad sort spec / collect error escapes mid-flight
-        persisted: List[DataFrame] = []
-        try:
-            return self._search_facetblocks_impl(input, persisted)
-        finally:
-            for df in persisted:
-                df.unpersist()
+    def _search_facetblocks(
+        self,
+        input: Dict[str, Any],
+        per_page: int,
+        page: int,
+        persist: Callable[[Any], Any],
+    ) -> _RouteRun:
+        """The facet-block route: the result set and every bucket filter
+        set come from the facet-block set algebra; the page and the
+        bucket count passes then run concurrently."""
+        from .facetblocks import BlockSetAlgebra
 
-    def _search_facetblocks_impl(
-        self, input: Dict[str, Any], persisted: List[DataFrame]
-    ) -> Dict[str, Any]:
-        import time
-        from concurrent.futures import ThreadPoolExecutor
-
-        from .facetblocks import BlockSetAlgebra, _freeze
-
-        t0 = time.time()
-        per_page, page = _parse_paging(input)
         compiled = self.compile(input, has_query=False)
         alg = BlockSetAlgebra(self.index, self.index.facet_posting_blocks)
-
-        def persist_if_df(res):
-            if not isinstance(res, bool):
-                res.persist()
-                persisted.append(res)
-            return res
-
-        # group fields by bucket-predicate shape (they differ only by
-        # disjunctive self-exclusion) and evaluate each shape ONCE:
-        #   TRUE  → the dimension's cached global counts, zero jobs;
-        #   FALSE → all-zero counts, zero jobs;
-        #   a set → one forward-index pass over docs semi-joined with the
-        #           (small) docid set, stacked for all fields of the
-        #           shape — work scales with the FILTER SET, never the
-        #           per-field posting lists (at 10^12 docs a selective
-        #           filter search touches its own posting blocks plus
-        #           |result| rows of the forward index, period).
-        groups: Dict[tuple, List[str]] = {}
-        gset: Dict[tuple, Any] = {}
-        for fld in self.index.facet_fields:
-            key = _freeze(compiled.bucket_pred[fld])
-            if key not in groups:
-                groups[key] = []
-                gset[key] = persist_if_df(alg.docids(compiled.bucket_pred[fld]))
-            groups[key].append(fld)
-
+        buckets = self._block_bucket_pass(input, compiled, alg, persist)
         # the bucket sets are marked persisted BEFORE the first action, so
         # the final-set job below materializes their caches as it reads
         # through them (result_pred is built from the same conjuncts) and
         # the count jobs reuse instead of re-deriving
-        t_s = time.time()
-        final = persist_if_df(alg.docids(compiled.final_pred))
+        final = persist(alg.docids(compiled.final_pred))
         if final is True:
             total = self.index.docs.count()
         elif final is False:
             total = 0
         else:
             total = final.count()
-        search_time = time.time() - t_s
-
-        t_f = time.time()
-        counts: Dict[str, Dict[str, int]] = {}
-        count_jobs: List[Tuple[List[str], DataFrame]] = []
-        for key, flds in groups.items():
-            s = gset[key]
-            if s is False:
-                for f in flds:
-                    counts[f] = {}
-            elif s is True:
-                for f in flds:
-                    counts[f] = dict((self._facet_global or {}).get(f, {}))
-            else:
-                count_jobs.append((flds, s))
-
-        def group_counts(flds, s):
-            base = self.index.docs.join(s, DOCID, "left_semi")
-            rows = self._stacked_field_counts(base, flds).collect()
-            out: Dict[str, Dict[str, int]] = {f: {} for f in flds}
-            for r in rows:
-                out[r["field"]][r["key"]] = r["doc_count"]
-            return out
 
         flt = (
             self.index.docs
@@ -5391,50 +5092,62 @@ class SearchEngine:
         ordered = self._order(flt, input, None)
         page_df = ordered.offset((page - 1) * per_page).limit(per_page)
         keep = self._page_keep(page_df.columns, input)
-        page_secs = [0.0]
-
-        def run_page():
-            t_p = time.time()
-            out = [
-                _row_to_item(r)
-                for r in page_df.select(*keep)
-                .withColumnRenamed(DOCID, "_id")
-                .collect()
-            ]
-            page_secs[0] = time.time() - t_p
-            return out
-
-        with ThreadPoolExecutor(max_workers=len(count_jobs) + 1) as ex:
-            f_page = ex.submit(run_page)
-            futures = [ex.submit(group_counts, flds, s) for flds, s in count_jobs]
-            for f in futures:
-                counts.update(f.result())
-            items = f_page.result()
-        aggregations = self._assemble_buckets(
-            input, counts, self._facet_dim_cache()
+        return _RouteRun(
+            facets=lambda: (buckets(), total),
+            page=lambda: _collect_page(page_df, keep),
+            all_items=(
+                (lambda: _collect_page(ordered, keep))
+                if input.get("is_all_filtered_items")
+                else None
+            ),
         )
-        facets_time = time.time() - t_f
 
-        all_filtered_items = None
-        if input.get("is_all_filtered_items"):
-            self._guard_all_filtered_collect(total)
-            all_df = ordered.select(*keep).withColumnRenamed(DOCID, "_id")
-            all_filtered_items = [_row_to_item(r) for r in all_df.collect()]
+    def _block_bucket_pass(
+        self,
+        input: Dict[str, Any],
+        compiled,
+        alg,
+        persist: Callable[[Any], Any],
+    ) -> Callable[[], Dict[str, Any]]:
+        """Facet-block bucket counting, shared by the facet-block search
+        route and get_buckets. Fields are grouped by bucket-predicate
+        shape (they differ only by disjunctive self-exclusion) and each
+        shape is evaluated ONCE:
+          TRUE  → the dimension's cached global counts, zero jobs;
+          FALSE → all-zero counts, zero jobs;
+          a set → one forward-index pass over docs semi-joined with the
+                  (small) docid set, stacked for all fields of the
+                  shape — work scales with the FILTER SET, never the
+                  per-field posting lists (at 10^12 docs a selective
+                  filter search touches its own posting blocks plus
+                  |result| rows of the forward index, period).
+        The sets are persisted now, before any action; the returned
+        thunk runs the count passes concurrently and assembles the
+        response buckets."""
+        counts: Dict[str, Dict[str, int]] = {}
+        passes: List[Callable[[], Dict[str, Dict[str, int]]]] = []
+        for flds, s in alg.bucket_groups(
+            compiled.bucket_pred, self.index.facet_fields
+        ):
+            if isinstance(s, bool):
+                for f in flds:
+                    counts[f] = dict((self._facet_global or {}).get(f, {})) if s else {}
+            else:
+                stacked = self._stacked_field_counts(
+                    self.index.docs.join(persist(s), DOCID, "left_semi"), flds
+                )
+                passes.append(
+                    lambda stacked=stacked, flds=flds: self._count_maps(
+                        stacked, flds
+                    )[0]
+                )
 
-        return {
-            "pagination": {"per_page": per_page, "page": page, "total": total},
-            "timings": {
-                "total": int((time.time() - t0) * 1000),
-                "facets": int(facets_time * 1000),
-                "search": int(search_time * 1000),
-                "sorting": int(page_secs[0] * 1000),
-            },
-            "data": {
-                "items": items,
-                "allFilteredItems": all_filtered_items,
-                "aggregations": aggregations,
-            },
-        }
+        def run() -> Dict[str, Any]:
+            for c in _run_concurrently(self.spark, passes):
+                counts.update(c)
+            return self._assemble_buckets(input, counts, self._facet_dim_cache())
+
+        return run
 
     # ------------------------------------------------------------------
     # buckets (helpers.ts:388-520)
@@ -5492,12 +5205,8 @@ class SearchEngine:
         hits, _ = self._candidates(input)
         compiled = self.compile(input, has_query=hits is not None)
         base = self._docs_with_query_flag(hits)
-        pred = ir_to_column(compiled.bucket_pred[field], hits is not None)
-        counted = (
-            base.filter(pred)
-            .select(F.explode(F.array_distinct(FK_PREFIX + field)).alias("key"))
-            .groupBy("key")
-            .agg(F.count("*").alias("doc_count"))
+        counted = self._key_counts(
+            base, field, ir_to_column(compiled.bucket_pred[field], hits is not None)
         )
         # orderBy+limit → TakeOrderedAndProject: per-partition top-k
         # heaps merged on the driver; no global sort, no single-partition
@@ -5506,15 +5215,23 @@ class SearchEngine:
             F.col("doc_count").desc(), F.col("key").asc()
         ).limit(size)
 
-    def _field_counts(
-        self, base: DataFrame, field: str, compiled, has_query: bool
-    ) -> DataFrame:
-        pred = ir_to_column(compiled.bucket_pred[field], has_query)
-        counted = (
+    @staticmethod
+    def _key_counts(base: DataFrame, field: str, pred: Column) -> DataFrame:
+        """(key, doc_count) of one facet over the rows of ``base`` that
+        ``pred`` admits: one explode of each row's distinct keys, one
+        groupBy. Non-zero keys only."""
+        return (
             base.filter(pred)
             .select(F.explode(F.array_distinct(FK_PREFIX + field)).alias("key"))
             .groupBy("key")
             .agg(F.count("*").alias("doc_count"))
+        )
+
+    def _field_counts(
+        self, base: DataFrame, field: str, compiled, has_query: bool
+    ) -> DataFrame:
+        counted = self._key_counts(
+            base, field, ir_to_column(compiled.bucket_pred[field], has_query)
         )
         dim = self.index.facet_values.filter(F.col("field") == field).select(
             "key", "enum_rank"
@@ -5529,118 +5246,28 @@ class SearchEngine:
     # aggregation as the facet buckets (not a legal facet field name)
     TOTAL_FIELD = "\x00total"
 
-    def _all_field_counts(
+    def _stacked_field_counts(
         self,
         base: DataFrame,
-        compiled,
-        has_query: bool,
-        with_total: bool = False,
+        fields: Sequence[str],
+        preds: Optional[Dict[str, Column]] = None,
+        total_pred: Optional[Column] = None,
     ) -> DataFrame:
-        """One shuffle for every facet AND (optionally) the result-set
-        total: stack (field, key) pairs from all facet columns, gated by
-        each field's bucket predicate, plus a pseudo-entry gated by the
-        final result predicate. Returns (field, key, doc_count) for
-        non-zero groups only — a search() costs ONE corpus pass for all
-        of its counting."""
+        """(field, key, doc_count) for every facet in ``fields`` in ONE
+        explode + one shuffle: each row's distinct keys are tagged with
+        their field name and stacked. ``preds`` gates each field by its
+        bucket predicate; ``total_pred`` adds a TOTAL_FIELD pseudo-entry
+        counting the rows it admits, so a search() costs ONE corpus pass
+        for all of its counting. Without gates (facet-block search) the
+        crossing is already applied to ``base`` as a docid semi-join.
+        Non-zero groups only."""
         struct_t = "array<struct<field:string,key:string>>"
 
-        def tag_with(fieldname):
-            # NB: a 2-arg lambda would make F.transform pass (elem, index)
-            return lambda k: F.struct(
-                F.lit(fieldname).alias("field"), k.alias("key")
-            )
+        def gated(arr: Column, pred: Optional[Column]) -> Column:
+            if pred is None:
+                return arr
+            return F.when(pred, arr).otherwise(F.lit(None).cast(struct_t))
 
-        arrays = []
-        for fld in self.index.facet_fields:
-            pred = ir_to_column(compiled.bucket_pred[fld], has_query)
-            mapped = F.transform(
-                F.array_distinct(F.col(FK_PREFIX + fld)), tag_with(fld)
-            )
-            arrays.append(
-                F.when(pred, mapped).otherwise(F.lit(None).cast(struct_t))
-            )
-        if with_total:
-            total_pred = ir_to_column(compiled.final_pred, has_query)
-            arrays.append(
-                F.when(
-                    total_pred,
-                    F.array(
-                        F.struct(
-                            F.lit(self.TOTAL_FIELD).alias("field"),
-                            F.lit("").alias("key"),
-                        )
-                    ),
-                ).otherwise(F.lit(None).cast(struct_t))
-            )
-        stacked = base.select(
-            F.explode(F.flatten(F.filter(F.array(*arrays), lambda a: a.isNotNull()))).alias("fk")
-        ).select("fk.field", "fk.key")
-        return stacked.groupBy("field", "key").agg(
-            F.count("*").alias("doc_count")
-        )
-
-    def _facetblock_buckets(self, input: Dict[str, Any], with_total: bool):
-        """Bucket counts (+ optional result total) from the facet-block
-        set algebra — the counting core of ``_search_facetblocks`` for
-        callers that need no item page (get_buckets / aggregation)."""
-        from .facetblocks import BlockSetAlgebra, _freeze
-
-        compiled = self.compile(input, has_query=False)
-        alg = BlockSetAlgebra(self.index, self.index.facet_posting_blocks)
-        persisted: List[DataFrame] = []
-        try:
-            groups: Dict[tuple, List[str]] = {}
-            gset: Dict[tuple, Any] = {}
-            for fld in self.index.facet_fields:
-                key = _freeze(compiled.bucket_pred[fld])
-                if key not in groups:
-                    groups[key] = []
-                    s = alg.docids(compiled.bucket_pred[fld])
-                    if not isinstance(s, bool):
-                        s.persist()
-                        persisted.append(s)
-                    gset[key] = s
-                groups[key].append(fld)
-            counts: Dict[str, Dict[str, int]] = {}
-            for key, flds in groups.items():
-                s = gset[key]
-                if s is False:
-                    for f in flds:
-                        counts[f] = {}
-                elif s is True:
-                    for f in flds:
-                        counts[f] = dict((self._facet_global or {}).get(f, {}))
-                else:
-                    base = self.index.docs.join(s, DOCID, "left_semi")
-                    rows = self._stacked_field_counts(base, flds).collect()
-                    for f in flds:
-                        counts[f] = {}
-                    for r in rows:
-                        counts[r["field"]][r["key"]] = r["doc_count"]
-            total = None
-            if with_total:
-                final = alg.docids(compiled.final_pred)
-                if final is True:
-                    total = self.index.docs.count()
-                elif final is False:
-                    total = 0
-                else:
-                    total = final.count()
-            return (
-                self._assemble_buckets(input, counts, self._facet_dim_cache()),
-                total,
-            )
-        finally:
-            for df in persisted:
-                df.unpersist()
-
-    def _stacked_field_counts(
-        self, base: DataFrame, fields: Sequence[str]
-    ) -> DataFrame:
-        """(field, key, doc_count) over ``base`` for ``fields`` with no
-        predicate gating — the forward-index count pass used when the
-        crossing is already applied as a docid semi-join (facet-block
-        search). One explode + one shuffle for the whole field group."""
         def tag_with(fieldname):
             # NB: a 2-arg lambda would make F.transform pass (elem, index)
             return lambda k: F.struct(
@@ -5648,15 +5275,39 @@ class SearchEngine:
             )
 
         arrays = [
-            F.transform(F.array_distinct(F.col(FK_PREFIX + f)), tag_with(f))
+            gated(
+                F.transform(F.array_distinct(F.col(FK_PREFIX + f)), tag_with(f)),
+                (preds or {}).get(f),
+            )
             for f in fields
         ]
+        if total_pred is not None:
+            total_tag = F.struct(
+                F.lit(self.TOTAL_FIELD).alias("field"), F.lit("").alias("key")
+            )
+            arrays.append(gated(F.array(total_tag), total_pred))
         stacked = base.select(
-            F.explode(F.flatten(F.array(*arrays))).alias("fk")
+            F.explode(
+                F.flatten(F.filter(F.array(*arrays), lambda a: a.isNotNull()))
+            ).alias("fk")
         ).select("fk.field", "fk.key")
         return stacked.groupBy("field", "key").agg(
             F.count("*").alias("doc_count")
         )
+
+    def _count_maps(
+        self, stacked: DataFrame, fields: Sequence[str]
+    ) -> Tuple[Dict[str, Dict[str, int]], Optional[int]]:
+        """Collect ``_stacked_field_counts`` rows into per-field
+        {key: doc_count} maps, plus the TOTAL_FIELD count if present."""
+        counts: Dict[str, Dict[str, int]] = {f: {} for f in fields}
+        total: Optional[int] = None
+        for r in stacked.collect():
+            if r["field"] == self.TOTAL_FIELD:
+                total = r["doc_count"]
+            else:
+                counts[r["field"]][r["key"]] = r["doc_count"]
+        return counts, total
 
     def get_buckets(
         self,
@@ -5679,24 +5330,40 @@ class SearchEngine:
         with_total: bool = False,
     ):
         """Reference getBuckets (helpers.ts:388-520): one distributed count
-        pass (optionally carrying the result-set total as a pseudo-field —
-        search() then needs no separate count job), then driver-side
-        assembly against the cached facet dimension (zero-count fill,
-        selected flags, lodash ordering, facet_stats)."""
-        # standalone bucket requests (get_buckets / aggregation endpoint)
-        # take the facet-block counting path under the same cost-based
-        # routing as search(); callers that already computed candidates
-        # (compiled is not None) stay on their scan plan
-        if compiled is None and self._facetblock_search_applies(input or {}):
-            return self._facetblock_buckets(input or {}, with_total)
+        pass (with ``with_total``, carrying the result-set total as a
+        pseudo-field — search() then needs no separate count job), then
+        driver-side assembly against the cached facet dimension
+        (zero-count fill, selected flags, lodash ordering,
+        facet_stats)."""
         if compiled is None:
+            # standalone bucket requests (get_buckets / aggregation
+            # endpoint) take the facet-block counting path under the same
+            # planner as search(); callers that already computed
+            # candidates (compiled is not None) stay on their scan plan
+            input = input or {}
+            if self.plan(input)["route"] == "facet_blocks":
+                from .facetblocks import BlockSetAlgebra
+
+                with self._request_scope() as persist:
+                    compiled = self.compile(input, has_query=False)
+                    alg = BlockSetAlgebra(
+                        self.index, self.index.facet_posting_blocks
+                    )
+                    buckets = self._block_bucket_pass(
+                        input, compiled, alg, persist
+                    )
+                    return buckets(), None
             hits, _ = self._candidates(input)
             has_query = hits is not None
             compiled = self.compile(input, has_query=has_query)
             base = self._docs_with_query_flag(hits)
 
-        if not self.index.facet_fields:
-            return {}, None
+        fields = list(self.index.facet_fields)
+        if not fields:
+            if not with_total:
+                return {}, None
+            final = ir_to_column(compiled.final_pred, has_query)
+            return {}, base.filter(final).count()
 
         dim = self._facet_dim_cache()
         if dim is None:
@@ -5706,16 +5373,17 @@ class SearchEngine:
                 input, compiled, base, has_query, with_total
             )
 
-        counts_rows = self._all_field_counts(
-            base, compiled, has_query, with_total=with_total
-        ).collect()
-        total: Optional[int] = 0 if with_total else None
-        counts: Dict[str, Dict[str, int]] = {f: {} for f in self.index.facet_fields}
-        for r in counts_rows:
-            if r["field"] == self.TOTAL_FIELD:
-                total = r["doc_count"]
-                continue
-            counts[r["field"]][r["key"]] = r["doc_count"]
+        counts, total = self._count_maps(
+            self._stacked_field_counts(
+                base,
+                fields,
+                {f: ir_to_column(compiled.bucket_pred[f], has_query) for f in fields},
+                ir_to_column(compiled.final_pred, has_query) if with_total else None,
+            ),
+            fields,
+        )
+        if with_total and total is None:
+            total = 0
         return self._assemble_buckets(input, counts, dim), total
 
     def _assemble_buckets(
@@ -5803,27 +5471,22 @@ class SearchEngine:
         The per-field count jobs (plus the total) are independent Spark
         actions — they are submitted from driver threads so the cluster
         pipelines them instead of running N facet fields serially."""
-        from concurrent.futures import ThreadPoolExecutor
-
         fields = list(self.index.facet_fields)
-        with ThreadPoolExecutor(max_workers=min(8, len(fields) + 1)) as ex:
-            f_total = (
-                ex.submit(
-                    lambda: base.filter(
-                        ir_to_column(compiled.final_pred, has_query)
-                    ).count()
-                )
-                if with_total
-                else None
+        jobs: List[Callable[[], Any]] = [
+            lambda fld=fld: self._huge_field_entry(
+                input, compiled, base, has_query, fld
             )
-            f_fields = [
-                ex.submit(
-                    self._huge_field_entry, input, compiled, base, has_query, fld
-                )
-                for fld in fields
-            ]
-            entries = [f.result() for f in f_fields]
-            total: Optional[int] = f_total.result() if f_total else None
+            for fld in fields
+        ]
+        if with_total:
+            jobs.append(
+                lambda: base.filter(
+                    ir_to_column(compiled.final_pred, has_query)
+                ).count()
+            )
+        results = _run_concurrently(self.spark, jobs, max_workers=8)
+        entries = results[: len(fields)]
+        total: Optional[int] = results[-1] if with_total else None
 
         out: Dict[str, Any] = {}
         for position, entry in enumerate(entries, start=1):
@@ -5844,12 +5507,10 @@ class SearchEngine:
         selected_keys = [rv for rv in raw_filters if isinstance(rv, str)]
         size = agg.get("size") or 10
 
-        pred = ir_to_column(compiled.bucket_pred[fld], has_query)
         counted = (
-            base.filter(pred)
-            .select(F.explode(F.array_distinct(FK_PREFIX + fld)).alias("key"))
-            .groupBy("key")
-            .agg(F.count("*").alias("doc_count"))
+            self._key_counts(
+                base, fld, ir_to_column(compiled.bucket_pred[fld], has_query)
+            )
             .withColumn(
                 "selected",
                 F.col("key").isin(selected_keys)

@@ -36,7 +36,7 @@ from .blocks import decode_varint_deltas
 def wand_topk(
     spark: SparkSession,
     blocks: DataFrame,
-    term_weights: Dict[str, float],
+    term_weights: Dict[str, Tuple[float, float]],
     term_masks: Dict[str, int],
     full_mask: int,
     magnitude: float,
@@ -48,8 +48,9 @@ def wand_topk(
 ) -> DataFrame:
     """Top-k (_docid, __score) for an analyzed query.
 
-    term_weights: term -> w (query weight already multiplied by idf, as
-    in SearchEngine.fulltext_hits); contribution of a posting = w * tf.
+    term_weights: term -> (query weight w, idf); contribution of a
+    posting = w * tf * idf, multiplied in that order as in
+    SearchEngine.fulltext_hits and the oracle.
     term_masks: term -> bitmask of query-token indexes it expands.
     full_mask: all query tokens — a doc must cover it (conjunctive AND).
 
@@ -102,14 +103,16 @@ def wand_topk(
         )
 
     # ---- phase 1: per-range upper bounds from metadata only ----------
-    w_rows = [(t, float(term_weights[t])) for t in terms]
-    wdf = spark.createDataFrame(w_rows, "term string, w double")
+    w_rows = [
+        (t, float(term_weights[t][0]), float(term_weights[t][1])) for t in terms
+    ]
+    wdf = spark.createDataFrame(w_rows, "term string, w double, idf double")
     ub_rows = (
         tblocks.groupBy("range_id", "term")
         .agg(F.max("max_tf").alias("mtf"))
         .join(F.broadcast(wdf), "term")
         .groupBy("range_id")
-        .agg(F.sum(F.col("mtf") * F.col("w")).alias("ub"))
+        .agg(F.sum(F.col("w") * F.col("mtf") * F.col("idf")).alias("ub"))
         .collect()
     )
     ranges = sorted(ub_rows, key=lambda r: -r["ub"])
@@ -154,11 +157,11 @@ def wand_topk(
         score = np.zeros(len(uniq), dtype=np.float64)
         mask = np.zeros(len(uniq), dtype=np.int64)
         for term in sorted(per_term):  # fixed reduction order = parity
-            w = tw[term]
+            w, idf = tw[term]
             m = tm[term]
             for d, t in per_term[term]:
                 idx = np.searchsorted(uniq, d)
-                score[idx] += w * t
+                score[idx] += w * t * idf
                 mask[idx] |= m
         ok = mask == full_mask
         if allowed is not None:

@@ -130,32 +130,30 @@ def test_checkpointed_build_resume(spark, tx_engine, tmp_path):
             assert key in m
 
 
-def test_wide_sum_route_bit_equals_struct_fold(spark, tx_engine):
-    """The rank-pivot score aggregation (WIDE_SUM_MAX_TERMS path) must be
-    bit-identical to the sorted-struct-array fold it replaced — same
-    sorted-term reduction order, +0.0 padding for absent ranks. Forcing
-    the cap to 0 routes everything through the struct fold."""
-    queries = ["spark", "shuffle partition", "s", "the", "broadcast join"]
-    wide_single = {
-        q: {r[DOCID]: r["__score"] for r in tx_engine.fulltext_hits(q).collect()}
-        for q in queries
-    }
-    wide_batch = sorted(map(tuple, tx_engine.fulltext_hits_batch(queries).collect()))
-    old_cap = tx_engine.WIDE_SUM_MAX_TERMS
-    tx_engine.WIDE_SUM_MAX_TERMS = 0
-    try:
-        for q in queries:
-            struct_single = {
-                r[DOCID]: r["__score"] for r in tx_engine.fulltext_hits(q).collect()
-            }
-            assert struct_single == wide_single[q], q
-        assert wide_single["spark"]  # non-vacuous
-        struct_batch = sorted(
-            map(tuple, tx_engine.fulltext_hits_batch(queries).collect())
-        )
-        assert struct_batch == wide_batch and wide_batch
-    finally:
-        tx_engine.WIDE_SUM_MAX_TERMS = old_cap
+def test_scores_bit_equal_lunr_oracle(spark, tx_engine):
+    """Engine scores equal the lunr oracle's with ``==``, not approx:
+    the single-query and batch scorers both multiply w·tf·idf in the
+    oracle's order and add the contributions in sorted-term order.
+    1-, 2- and 3-term queries plus the prefix expansions "s" and "pa"."""
+    from itemsjs_spark.oracle.itemsjs_oracle import FulltextOracle
+
+    rows = tx_engine.index.docs.select(DOCID, "text").orderBy(DOCID).collect()
+    oracle = FulltextOracle(
+        [{"text": r["text"]} for r in rows], {"searchableFields": ["text"]}
+    )
+    docid_of_ref = {str(i): r[DOCID] for i, r in enumerate(rows, start=1)}
+    queries = ["spark", "shuffle partition", "broadcast join skew", "s", "pa"]
+    batch = {}
+    for r in tx_engine.fulltext_hits_batch(queries).collect():
+        batch.setdefault(r["qid"], {})[r[DOCID]] = r["__score"]
+    for qid, q in enumerate(queries):
+        want = {docid_of_ref[ref]: s for ref, s in oracle.ranked_search(q)}
+        assert want, q  # non-vacuous
+        single = {
+            r[DOCID]: r["__score"] for r in tx_engine.fulltext_hits(q).collect()
+        }
+        assert single == want, q
+        assert batch.get(qid) == want, q
 
 
 def test_fulltext_batch_matches_single(spark, tx_engine):

@@ -185,6 +185,18 @@ def test_callback_similar_mlt_exclude_deleted(eng):
     assert victim not in mlt_ids
 
 
+def test_batch_scoring_and_dis_max_exclude_deleted(eng):
+    before = {r["_docid"] for r in eng.fulltext_hits("spark").collect()}
+    victim = min(before)
+    eng.delete_docids([victim])
+    live = {r["_docid"] for r in eng.fulltext_hits("spark").collect()}
+    assert live == before - {victim}
+    batch = {r["_docid"] for r in eng.fulltext_hits_batch(["spark"]).collect()}
+    assert batch == live
+    dm = eng.dis_max_hits(["spark", "join"], k=len(before) + 1000).collect()
+    assert dm and victim not in {r["_id"] for r in dm}
+
+
 def test_append_carries_tombstones(spark, eng):
     victim = eng.index.docs.select("_docid").orderBy("_docid").first()[0]
     eng.delete_docids([victim])
