@@ -1,7 +1,7 @@
 """spark-submit packaging: ship the itemsjs_spark package to executors.
 
 The engine's Arrow-batched UDF closures (tokenizer mapInPandas, callback
-filters, multimodal extractors) unpickle on executors and import
+filters) unpickle on executors and import
 ``itemsjs_spark`` there. On a real cluster the package ships via
 ``spark-submit --py-files itemsjs_spark.zip`` (north_rule); for driver-side
 entry points (the grader harness, notebooks) ``ensure_shipped(spark)``

@@ -1,7 +1,8 @@
 """Mimics the driver's correctness gate: runs every ``queries()`` entry on
 Spark and its ``oracle_sql()`` on DuckDB over the same parquet tables, then
-compares row count, sorted column names, and the order-insensitive value
-multiset — exactly the contract the driver hashes at sf=0.01."""
+compares row count, sorted column names, integer column widths, and the
+order-insensitive value multiset — the contract the driver hashes at
+sf=0.01 (its hash sees the width that ``_canon`` folds away)."""
 
 from __future__ import annotations
 
@@ -46,6 +47,28 @@ def _canon(v):
     return v
 
 
+# Spark integer type -> the DuckDB type of the same width. Any other DuckDB
+# integer type (HUGEINT, the unsigned ones) matches nothing.
+_INT_WIDTH = {
+    "bigint": "BIGINT", "int": "INTEGER",
+    "smallint": "SMALLINT", "tinyint": "TINYINT",
+}
+_DUCK_INTS = {
+    "BIGINT", "INTEGER", "SMALLINT", "TINYINT", "HUGEINT",
+    "UBIGINT", "UINTEGER", "USMALLINT", "UTINYINT", "UHUGEINT",
+}
+
+
+def _int_width_mismatches(sdtypes, ocols, otypes):
+    """Columns where either side is an integer and the widths differ."""
+    otype = dict(zip(ocols, map(str, otypes)))
+    return [
+        (c, st, otype[c]) for c, st in sdtypes
+        if (st in _INT_WIDTH or otype[c] in _DUCK_INTS)
+        and _INT_WIDTH.get(st) != otype[c]
+    ]
+
+
 def _multiset(rows, cols):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     return sorted(
@@ -71,6 +94,8 @@ def test_query_matches_oracle(name, spark, ddb):
     orows = res.fetchall()
     ocols = res.columns
     assert sorted(scols) == sorted(ocols), f"{name}: column names differ"
+    bad = _int_width_mismatches(sdf.dtypes, ocols, res.types)
+    assert bad == [], f"{name}: integer width differs (col, spark, oracle): {bad}"
     assert len(srows) == len(orows), (
         f"{name}: row count {len(srows)} (spark) vs {len(orows)} (oracle)"
     )

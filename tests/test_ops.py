@@ -1,12 +1,12 @@
-"""Training-data-pipeline operator tests (itemsjs_spark.ops): multimodal
-plumbing, LSH recall vs brute force, MinHash-LSH candidate generation."""
+"""Training-data-pipeline operator tests (itemsjs_spark.ops): LSH recall
+vs brute force, MinHash-LSH candidate generation."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from itemsjs_spark.ops import dedup, embeddings, multimodal, text
+from itemsjs_spark.ops import dedup, embeddings, text
 
 SF = "/root/testdata/sf0.001"
 
@@ -19,46 +19,6 @@ def docs(spark):
 @pytest.fixture(scope="module")
 def emb(spark):
     return spark.read.parquet(f"{SF}/embeddings.parquet").persist()
-
-
-def test_multimodal_feature_plumbing(spark, docs):
-    payloads = docs.select("doc_id", F.unhex(F.md5("text")).alias("payload"))
-    out = multimodal.extract_features(payloads, dims=6)
-    rows = out.collect()
-    assert len(rows) == docs.count()
-    for r in rows[:20]:
-        assert r["n_bytes"] == 16
-        assert len(r["features"]) == 6
-        assert all(0.0 <= v <= 1.0 for v in r["features"])
-    # deterministic across runs
-    again = sorted(map(lambda r: (r["doc_id"], tuple(r["features"])), out.collect()))
-    first = sorted(map(lambda r: (r["doc_id"], tuple(r["features"])), rows))
-    assert again == first
-
-
-def test_multimodal_frame_sampling(spark, docs):
-    payloads = docs.limit(10).select("doc_id", F.unhex(F.md5("text")).alias("payload"))
-    frames = multimodal.sample_frames(payloads, every_n_bytes=4)
-    rows = frames.collect()
-    # 16-byte payloads, 4-byte frames → 4 frames per doc
-    assert len(rows) == 40
-    per_doc = {}
-    for r in rows:
-        per_doc.setdefault(r["doc_id"], []).append((r["frame_idx"], bytes(r["frame"])))
-    for did, fr in per_doc.items():
-        assert sorted(i for i, _ in fr) == [0, 1, 2, 3]
-        assert b"".join(b for _, b in sorted(fr)) is not None
-
-
-def test_multimodal_real_decoder_rejects_nonpng(spark, docs):
-    # the image kernels are REAL now (stdlib PNG codec); feeding the real
-    # path non-PNG bytes fails loudly instead of fabricating features
-    payloads = docs.limit(2).select("doc_id", F.unhex(F.md5("text")).alias("payload"))
-    with pytest.raises(Exception, match="PNG|signature"):
-        multimodal.extract_features(payloads, fake=False).collect()
-    # video frame sampling stays an honest env-blocked stub (no ffmpeg)
-    with pytest.raises(Exception, match="NotImplementedError|plug"):
-        multimodal.sample_frames(payloads, fake=False).collect()
 
 
 def test_lsh_topk_recall_vs_bruteforce(spark, emb):
@@ -257,19 +217,6 @@ def test_ivf_multiprobe_recall_supersets_single_cell(spark, emb):
         key = (r["query_id"], r["neighbor_id"])
         if key in exact_cos:
             assert r["cosine"] == exact_cos[key]
-
-
-def test_multimodal_resize_plumbing(spark, docs):
-    payloads = docs.limit(20).select("doc_id", F.unhex(F.md5("text")).alias("payload"))
-    out = multimodal.resize_images(payloads, width=4, height=3).collect()
-    assert len(out) == 20
-    for r in out:
-        assert len(bytes(r["resized"])) == 12
-        assert r["meta"]["width"] == 4 and r["meta"]["height"] == 3
-        assert r["meta"]["src_bytes"] == 16
-    import pytest as _pt
-    with _pt.raises(Exception, match="PNG|signature"):
-        multimodal.resize_images(payloads, 4, 3, fake=False).collect()
 
 
 def test_langid_chargram_picks_profile_language(spark):
